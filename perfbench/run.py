@@ -1,17 +1,20 @@
 #!/usr/bin/env python3
 """sparkhdb benchmark: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload image_dense --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 5 --trace 0
 
-Workloads (see BENCHMARK.json): ``image_dense``, ``query_wide``,
-``pipeline_batch``. The run sets up its inputs from ``--seed`` several
-times (fresh Spark session, generated data, one warm request per request
-type) and reports the median set-up time; then it replays whole blocks of
-the seeded request stream until ``--seconds`` have passed, checks every
-response against a DuckDB oracle, and prints one JSON result as the last
-stdout line. The line before it is a JSON detail record: what the run was
-measured on (cores, driver memory, versions, commit, seed), the tail
-percentile used, and any failures.
+Workloads: ``interactive`` and ``pipeline_batch`` (the ones BENCHMARK.json
+lists), and ``image_dense`` and ``query_wide``, the two halves of
+``interactive``. The run generates its inputs from ``--seed`` once, runs
+the program's own set-up on them several times (fresh Spark session,
+store write or table registration), sends one warm request per request
+type, and reports the median set-up plus the warm requests as the set-up
+time; then it replays whole blocks of the seeded request stream until
+``--seconds`` have passed, checks every response against a DuckDB
+oracle, and prints one JSON result as the last stdout line. The line
+before it is a JSON detail record: what the run was measured on (cores,
+driver memory, versions, commit, seed), the tail percentile used, and any
+failures.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` reads Spark's
 status stores after every request, prints the per-layer metrics and
@@ -39,6 +42,9 @@ import tempfile
 import threading
 import time
 
+#: process start, for the phase times in the detail record
+T_START = time.perf_counter()
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path[:0] = [HERE, ROOT]
@@ -64,7 +70,7 @@ REQUEST_LAYERS = ("resolve", "extrema", "rasterline", "render", "search")
 PER_LAYER = {
     **SPARK_LAYER,
     **{f"{name}.s": "s" for name in REQUEST_LAYERS},
-    "other.s": "s", "unattributed.s": "s",
+    "other.s": "s", "overlap.s": "s",
     "resolve.jobs": "count", "rasterline.exec_cpu_s": "s",
     "rasterline.tasks": "count", "render.rows_out": "count", "png.s": "s",
     "store.write_s": "s", "store.bytes_per_point": "B",
@@ -92,11 +98,12 @@ LAYER_SITES = {
 
 def tail(values: list[float]) -> tuple[float, int, int]:
     """(value, percentile, samples): the highest whole percentile with at
-    least ten samples above it (nearest-rank); with ten samples or fewer
-    no percentile has that, and the maximum (percentile 100) is used."""
+    least ten samples above it (nearest-rank). Below twenty samples that
+    percentile would not lie above the median, and the maximum
+    (percentile 100) is used instead."""
     xs = sorted(values)
     n = len(xs)
-    if n <= 10:
+    if n < 20:
         return xs[-1], 100, n
     p = (100 * (n - 10)) // n
     rank = max(1, -(-p * n // 100))
@@ -191,13 +198,20 @@ class Runner:
     # -- phases --------------------------------------------------------
 
     def setup(self) -> dict:
+        """The inputs are generated once, untimed (benchmark code). Each
+        rep starts a fresh session and runs the program's set-up on them;
+        the warm requests follow the last rep, once. ``setup_s`` is the
+        median rep plus the warm requests."""
+        t = time.perf_counter()
+        self.wl.generate(os.path.join(self.work, "inputs"), self.args.seed)
+        generate_s = time.perf_counter() - t
         reps, starts, info = [], [], {}
         for rep in range(SETUP_REPS):
             rep_dir = os.path.join(self.work, f"setup{rep}")
             t = time.perf_counter()
             self.session()
             starts.append(time.perf_counter() - t)
-            for k, v in self.wl.prepare(self.spark, rep_dir, self.args.seed).items():
+            for k, v in self.wl.prepare(self.spark, rep_dir).items():
                 info.setdefault(k, []).append(v)
             reps.append(time.perf_counter() - t)
             if rep:
@@ -213,7 +227,10 @@ class Runner:
         warm_s = time.perf_counter() - t
         out = {k: statistics.median(v) for k, v in info.items()}
         out["session.start_s"] = statistics.median(starts)
-        return {"setup_s": statistics.median(reps), "reps_s": reps, "warm_s": warm_s, "layer": out}
+        return {
+            "setup_s": statistics.median(reps) + warm_s, "reps_s": reps,
+            "warm_s": warm_s, "generate_s": generate_s, "layer": out,
+        }
 
     def _collect(self, group: str) -> dict:
         t = time.perf_counter()
@@ -262,34 +279,44 @@ class Runner:
         """Whole blocks until --seconds have passed, at least one."""
         rng = random.Random(self.args.seed)
         blocks, done = [], []
+        self.memo_at_pass = []
         start = time.perf_counter()
         while not blocks or time.perf_counter() - start < self.args.seconds:
             b = len(blocks)
             block = self.wl.block(rng)
             if self.wl.batch:
-                self.session()
-                self.wl.reopen(self.spark)
+                # the first pass runs in the last set-up's fresh session
+                if b:
+                    self.session()
+                    self.wl.reopen(self.spark)
+                self.memo_at_pass.append(workloads.memo_entries())
             t = time.perf_counter()
             self.trace_s = 0.0
             for i, req in enumerate(block):
                 rec, resp = self._request(f"b{b}r{i}", req)
                 done.append((req, resp, rec))
             blocks.append({"wall_s": time.perf_counter() - t, "trace_s": self.trace_s})
+        self.memo_after_pass = workloads.memo_entries()
         self.spark.sparkContext.setJobGroup("checks", "correctness checks")
         return blocks, done
 
     def check(self, done: list) -> list[str]:
-        """Every timed response against the oracle. The pipeline's timed
-        pass writes to a noop sink, so its queries are judged by the
-        results the warm pass collected from the same inputs."""
+        """Every warm and timed response against the oracle. The
+        pipeline's timed passes write to a noop sink, so each query is
+        collected once more in the last pass's session and that result
+        is judged."""
         con = self.wl.oracle()
+        failures = [
+            f"warm {req['kind']}: {msg}" for req, resp, err in self.warm
+            if (msg := err or self.wl.check(con, req, resp))
+        ]
         verdict = {}
         if self.wl.batch:
-            verdict = {
-                req["query"]: err or self.wl.check(con, req, resp)
-                for req, resp, err in self.warm
-            }
-        failures = []
+            for req in self.wl.block(None):
+                try:
+                    verdict[req["query"]] = self.wl.check(con, req, self.wl.execute(req))
+                except Exception as e:  # counted against every pass
+                    verdict[req["query"]] = repr(e)[:500]
         for req, resp, rec in done:
             if rec["error"] is not None:
                 msg = rec["error"]
@@ -309,48 +336,45 @@ def _mean(xs) -> float:
 
 
 def layer_metrics(runner: Runner, setup: dict, blocks: list, done: list) -> tuple[dict, list]:
-    """Per-layer metrics (means per request, or per pass for the
-    pipeline), plus one accounting row per interactive request."""
+    """Per-layer metrics, totals per block (per pass for the pipeline) so
+    that they add up like ``wall_s``, plus one accounting row per
+    interactive request."""
     traced = [rec for _, _, rec in done if rec["error"] is None]
     out = {k: 0.0 for k in PER_LAYER}
     out.update(setup["layer"])
     rows = []
     cpus = runner.cpus
+    n_blocks = len(blocks)
     if runner.wl.batch:
-        n_pass = len(blocks)
         groups = [g for r in traced for g in (r["build"], r["exec"])]
         for k in sparktrace.COUNTERS:
-            out[f"spark.{k}"] = sum(g[k] for g in groups) / n_pass
-        out["driver.self_s"] = sum(r["wall_s"] for r in traced) / n_pass - out["spark.job_wall_s"]
+            out[f"spark.{k}"] = sum(g[k] for g in groups) / n_blocks
+        out["driver.self_s"] = sum(r["wall_s"] for r in traced) / n_blocks - out["spark.job_wall_s"]
         out["other.s"] = out["spark.job_wall_s"]
         for m in workloads.PIPELINE_MODULES:
             mine = [r for r in traced if r["request"]["module"] == m]
-            out[f"pipeline.{m}.build_s"] = sum(r["build_s"] for r in mine) / n_pass
-            out[f"pipeline.{m}.exec_s"] = sum(r["exec_s"] for r in mine) / n_pass
-            out[f"pipeline.{m}.exec_cpu_s"] = sum(r["exec"]["exec_cpu_s"] for r in mine) / n_pass
-            out[f"pipeline.{m}.shuffle_write_bytes"] = sum(r["exec"]["shuffle_write_bytes"] for r in mine) / n_pass
+            out[f"pipeline.{m}.build_s"] = sum(r["build_s"] for r in mine) / n_blocks
+            out[f"pipeline.{m}.exec_s"] = sum(r["exec_s"] for r in mine) / n_blocks
+            out[f"pipeline.{m}.exec_cpu_s"] = sum(r["exec"]["exec_cpu_s"] for r in mine) / n_blocks
+            out[f"pipeline.{m}.shuffle_write_bytes"] = sum(r["exec"]["shuffle_write_bytes"] for r in mine) / n_blocks
     else:
-        n = len(traced) or 1
         for k in sparktrace.COUNTERS:
-            out[f"spark.{k}"] = sum(r["spark"][k] for r in traced) / n
+            out[f"spark.{k}"] = sum(r["spark"][k] for r in traced) / n_blocks
         for r in traced:
             sp = r["spark"]
             lay = {name: sp["layers"].get(name, {}).get("s", 0.0) for name in (*REQUEST_LAYERS, "other")}
-            self_s = r["wall_s"] - sp["job_wall_s"]
-            unattributed = r["wall_s"] - sum(lay.values()) - self_s
             rows.append({
                 **r["request"], "wall_s": r["wall_s"],
                 **{f"{k}.s": v for k, v in lay.items()},
-                "driver.self_s": self_s, "png.s": r["png_s"],
-                "unattributed.s": unattributed,
+                "overlap.s": sum(lay.values()) - sp["job_wall_s"],
+                "driver.self_s": r["wall_s"] - sp["job_wall_s"],
+                "png.s": r["png_s"],
             })
-        for name in (*REQUEST_LAYERS, "other"):
-            out[f"{name}.s"] = _mean(row[f"{name}.s"] for row in rows)
-        out["driver.self_s"] = _mean(row["driver.self_s"] for row in rows)
-        out["unattributed.s"] = _mean(row["unattributed.s"] for row in rows)
-        out["png.s"] = _mean(row["png.s"] for row in rows)
+        for key in (*(f"{n}.s" for n in (*REQUEST_LAYERS, "other", "overlap", "png")), "driver.self_s"):
+            out[key] = sum(row[key] for row in rows) / n_blocks
         for name, key in (("resolve", "jobs"), ("rasterline", "exec_cpu_s"), ("rasterline", "tasks")):
-            out[f"{name}.{key}"] = _mean(r["spark"]["layers"].get(name, {}).get(key, 0) for r in traced)
+            out[f"{name}.{key}"] = sum(r["spark"]["layers"].get(name, {}).get(key, 0) for r in traced) / n_blocks
+        # rows per /query response
         queries = [r for r in traced if r["request"]["kind"] == "query"]
         out["render.rows_out"] = _mean(r.get("result_rows", 0) for r in queries)
         result_rows = sum(r.get("result_rows", 0) for r in traced)
@@ -362,6 +386,17 @@ def layer_metrics(runner: Runner, setup: dict, blocks: list, done: list) -> tupl
         b["trace_s"] / (b["wall_s"] - b["trace_s"]) for b in blocks
     )
     return out, rows
+
+
+def rasterline_share(rows: list) -> dict:
+    """Per /image window class: the line-raster jobs' share of latency,
+    summed over the class's requests."""
+    images = [r for r in rows if r["kind"] == "image"]
+    out = {}
+    for key in sorted({r["window"] for r in images}, key=lambda w: (w == "store", len(w), w)):
+        mine = [r for r in images if r["window"] == key]
+        out[key] = sum(r["rasterline.s"] for r in mine) / sum(r["wall_s"] for r in mine)
+    return out
 
 
 def main(argv=None) -> int:
@@ -405,7 +440,10 @@ def main(argv=None) -> int:
 
         png.render_png_base64 = timed_png
     try:
+        phases = {"start": time.perf_counter() - T_START}
+        t = time.perf_counter()
         setup = runner.setup()
+        phases["setup"] = time.perf_counter() - t
         spark = runner.spark
         stamp = {
             "workload": args.workload, "seed": args.seed, "size": args.size,
@@ -416,8 +454,12 @@ def main(argv=None) -> int:
             "spark": spark.version, "python": platform.python_version(),
             "commit": _git_commit(),
         }
+        t = time.perf_counter()
         blocks, done = runner.measure()
+        phases["measure"] = time.perf_counter() - t
+        t = time.perf_counter()
         failures = runner.check(done)
+        phases["check"] = time.perf_counter() - t
         layers, rows = layer_metrics(runner, setup, blocks, done) if args.trace else ({}, [])
         peak_rss_mb = runner.shutdown() + _vm_hwm_mb("self")
     finally:
@@ -428,21 +470,31 @@ def main(argv=None) -> int:
         except OSError:  # another run is using it
             pass
 
-    lat = [b["wall_s"] for b in blocks] if runner.wl.batch else [rec["wall_s"] for _, _, rec in done]
+    # a request is one /image or /query call, or one query of a pass
+    lat = [rec["wall_s"] for _, _, rec in done]
     tail_v, tail_p, tail_n = tail(lat)
-    attempted = len(done)
+    attempted = len(runner.warm) + len(done)
     failed = len(failures)
     detail = {
         "stamp": stamp,
-        "blocks": len(blocks), "requests": attempted,
+        "blocks": len(blocks), "requests": len(done),
+        "generate_s": setup["generate_s"],
         "setup_reps_s": setup["reps_s"], "warm_s": setup["warm_s"],
         "latency_tail": {"percentile": tail_p, "samples": tail_n},
+        "block_walls_s": [round(b["wall_s"], 4) for b in blocks],
         "latencies_s": [round(x, 4) for x in lat],
         "failed_frac": failed / attempted,
         "failures": failures[:10],
         "peak_rss_mb": peak_rss_mb,
+        "phases_s": {k: round(v, 2) for k, v in phases.items()},
     }
+    if runner.wl.batch:
+        # process-global memo entries at the start of every timed pass (0:
+        # each pass pays its own memo builds) and after the last one
+        detail["memo_entries"] = {"pass_start": runner.memo_at_pass, "after_pass": runner.memo_after_pass}
     if args.trace:
+        if any(r["kind"] == "image" for r in rows):
+            detail["rasterline_share"] = rasterline_share(rows)
         layers["peak_rss_mb"] = peak_rss_mb
         metrics = {k: {"value": layers[k], "unit": u} for k, u in PER_LAYER.items()}
         path = args.trace_out or os.path.join(

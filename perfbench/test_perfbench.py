@@ -30,7 +30,7 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
     SPEC = json.load(f)
 
 
-@pytest.mark.parametrize("name", ["image_dense", "query_wide"])
+@pytest.mark.parametrize("name", ["image_dense", "query_wide", "interactive"])
 def test_request_stream_follows_seed(name):
     a = workloads.request_stream(name, 1, 3)
     assert a == workloads.request_stream(name, 1, 3)
@@ -52,7 +52,7 @@ def test_pipeline_corpus_follows_seed(tmp_path):
 def test_spec_matches_runner():
     import run
 
-    assert [w["name"] for w in SPEC["workloads"]] == sorted(workloads.WORKLOADS, key=list(workloads.WORKLOADS).index)
+    assert {w["name"] for w in SPEC["workloads"]} <= set(workloads.WORKLOADS)
     assert {m["name"]: m["unit"] for m in SPEC["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in SPEC["per_layer"]} == run.PER_LAYER
 
@@ -66,7 +66,7 @@ def _run(root, cwd, *args, timeout=300):
 
 
 @pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize("name", ["image_dense", "query_wide", "pipeline_batch"])
+@pytest.mark.parametrize("name", sorted(workloads.WORKLOADS))
 def test_tiny_run_prints_every_metric(tmp_path, name, trace):
     out = _run(
         ROOT, str(tmp_path), "--workload", name, "--seed", "3", "--seconds", "1",
@@ -80,12 +80,35 @@ def test_tiny_run_prints_every_metric(tmp_path, name, trace):
     want = SPEC["per_layer"] if trace else SPEC["end_to_end"]
     assert {k: v["unit"] for k, v in result["metrics"].items()} == {m["name"]: m["unit"] for m in want}
     assert all(isinstance(v["value"], (int, float)) for v in result["metrics"].values())
+    detail = json.loads(out.stdout.strip().splitlines()[-2])
+    if name == "pipeline_batch":
+        # every timed pass started with the process-global memos empty,
+        # so it paid its own memo builds, and the passes filled them
+        assert detail["memo_entries"]["pass_start"] == [0] * detail["blocks"]
+        assert detail["memo_entries"]["after_pass"] > 0
     if trace:
         record = json.loads((tmp_path / "trace.json").read_text())
-        assert len(record["records"]) == result["attempted"]
+        assert len(record["records"]) == detail["requests"]
         for row in record["accounting"]:
-            parts = sum(row[k] for k in row if k.endswith(".s") and k != "png.s")
-            assert abs(parts + row["driver.self_s"] - row["wall_s"]) < 1e-6
+            assert row["overlap.s"] >= -1e-9
+            assert row["driver.self_s"] <= row["wall_s"]
+        if name in ("image_dense", "interactive"):
+            # jobs are attributed by call site: every /image request runs
+            # resolve, extrema and line-raster jobs
+            for row in record["accounting"]:
+                if row["kind"] == "image":
+                    assert min(row["resolve.s"], row["extrema.s"], row["rasterline.s"]) > 0
+            assert "store" in detail["rasterline_share"]
+
+
+def test_clear_memos_empties_session_independent_memos():
+    from web_maxiv_hdbppviewer_spark.plans import extensions
+
+    extensions._NB_ARTIFACTS_MEMO[("sf", 0)] = ({}, None)
+    assert workloads.memo_entries() > 0
+    workloads.clear_memos()
+    assert extensions._NB_ARTIFACTS_MEMO == {}
+    assert workloads.memo_entries() == 0
 
 
 def test_fails_without_package(tmp_path):

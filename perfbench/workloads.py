@@ -1,4 +1,4 @@
-"""The three benchmark workloads: seeded request streams, set-up, request
+"""The benchmark workloads: seeded request streams, set-up, request
 execution through the package's public API, and correctness oracles.
 
 Each interactive workload replays BLOCKS: a block is a fixed list of
@@ -17,6 +17,8 @@ import json
 import math
 import os
 import random
+import re
+import sys
 import time
 from datetime import datetime, timedelta
 
@@ -40,8 +42,12 @@ SIZES = {
 }
 
 IMAGE_SIZE = (800, 400)
-#: /image block: (window hours or None for the whole store, attributes, axes)
-IMAGE_BLOCK = [(1, 4, 1), (None, 8, 2)]
+#: /image block, zoom in to zoom out: (window hours, or None for the whole
+#: store; attributes; axes). The seed picks each window's offset, the
+#: attributes, and a one-axis request's scale; two-axis requests put a
+#: linear axis beside a log one. Window lengths are fixed because they set
+#: the cost: a 1 h window takes a slower path than a 6 h one.
+IMAGE_BLOCK = [(1, 4, 1), (24, 8, 2), (None, 16, 2)]
 #: /query block: ("query", hours, targets, interval, format) or ("search",)
 QUERY_BLOCK = [
     ("query", 1, 1, None, "csv"),
@@ -100,12 +106,15 @@ class ImageDense:
                 t0 = EPOCH + timedelta(minutes=minutes)
                 t1 = t0 + timedelta(hours=hours)
             pools = [rng.sample(p, len(p)) for p in by_kind]
-            names = [pools[i % 3][i // 3] for i in range(n_attrs)]
-            # axis 0 linear; a second axis is log and holds every other attribute
-            axes = {"0": {"scale": "linear"}, "1": {"scale": "log"}}
+            names = [pools[i % 3][i // 3] for i in range(min(n_attrs, len(self.names)))]
+            if n_axes == 1:
+                axes = {"0": {"scale": rng.choice(["linear", "log"])}}
+            else:
+                # the log axis holds every other attribute
+                axes = {"0": {"scale": "linear"}, "1": {"scale": "log"}}
             out.append({
-                "kind": "image", "t0": t0, "t1": t1,
-                "axes": {a: axes[a] for a in map(str, range(n_axes))},
+                "kind": "image", "window": "store" if hours is None else f"{hours}h",
+                "t0": t0, "t1": t1, "axes": axes,
                 "attributes": [{"name": n, "y_axis": i % n_axes} for i, n in enumerate(names)],
             })
         return out
@@ -118,18 +127,20 @@ class ImageDense:
             "attributes": [{"name": n, "y_axis": i} for i, n in enumerate(self.names[:2])],
         }]
 
-    def prepare(self, spark, work: str, seed: int) -> dict:
+    def generate(self, inputs: str, seed: int) -> None:
+        os.makedirs(inputs, exist_ok=True)
+        self.raw = os.path.join(inputs, "raw.parquet")
+        self.points = write_raw_datapoints(self.raw, seed, **self.cfg)
+
+    def prepare(self, spark, work: str) -> dict:
         from pyspark.sql import functions as F
 
         from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
         from web_maxiv_hdbppviewer_spark.sources.hdbpp import HdbppCatalog, write_datapoints
 
-        os.makedirs(work, exist_ok=True)
-        raw = os.path.join(work, "raw.parquet")
-        points = write_raw_datapoints(raw, seed, **self.cfg)
         self.store = os.path.join(work, "store")
         t = time.perf_counter()
-        write_datapoints(spark.read.parquet(raw), self.store)
+        write_datapoints(spark.read.parquet(self.raw), self.store)
         write_s = time.perf_counter() - t
         files = [
             os.path.join(d, f) for d, _, fs in os.walk(self.store)
@@ -149,7 +160,7 @@ class ImageDense:
         return {
             "store.write_s": write_s,
             "store.files": len(files),
-            "store.bytes_per_point": sum(os.path.getsize(f) for f in files) / points,
+            "store.bytes_per_point": sum(os.path.getsize(f) for f in files) / self.points,
         }
 
     def execute(self, req: dict):
@@ -287,12 +298,14 @@ class QueryWide:
             {"kind": "search", "pattern": "dom1/fam1/*", "max_n": 20},
         ]
 
-    def prepare(self, spark, work: str, seed: int) -> dict:
+    def generate(self, inputs: str, seed: int) -> None:
+        self.sf_dir = os.path.join(inputs, "sf")
+        write_testdata(self.sf_dir, seed, **self.cfg)
+
+    def prepare(self, spark, work: str) -> dict:
         from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
         from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
-        self.sf_dir = os.path.join(work, "sf")
-        write_testdata(self.sf_dir, seed, **self.cfg)
         self.engine = HdbppQueryEngine(*hdbpp_fixture(spark, self.sf_dir))
         return {}
 
@@ -368,7 +381,95 @@ class QueryWide:
         return None
 
 
+# --- viewer session: /image, /query and /attributes together ---------------
+
+
+class Interactive:
+    """A viewer session: a user pans and zooms ``/image`` over the dense
+    store while a Grafana panel polls ``/query`` and the user searches
+    ``/attributes`` over the fixture, all on one Spark session. A block is
+    an ``ImageDense`` block with a ``QueryWide`` block interleaved, three
+    panel requests after each image."""
+
+    name = "interactive"
+    batch = False
+
+    def __init__(self, size: str):
+        self.image = ImageDense(size)
+        self.query = QueryWide(size)
+
+    def _part(self, req: dict):
+        return self.image if req["kind"] == "image" else self.query
+
+    def block(self, rng: random.Random) -> list[dict]:
+        images = self.image.block(rng)
+        panel = self.query.block(rng)
+        return [
+            req for i, img in enumerate(images)
+            for req in (img, *panel[3 * i : 3 * i + 3])
+        ] + panel[3 * len(images):]
+
+    def warm_requests(self) -> list[dict]:
+        return self.image.warm_requests() + self.query.warm_requests()
+
+    def generate(self, inputs: str, seed: int) -> None:
+        self.image.generate(os.path.join(inputs, "image"), seed)
+        self.query.generate(os.path.join(inputs, "query"), seed)
+
+    def prepare(self, spark, work: str) -> dict:
+        return {**self.image.prepare(spark, work), **self.query.prepare(spark, work)}
+
+    def execute(self, req: dict):
+        return self._part(req).execute(req)
+
+    def result_rows(self, req: dict, resp) -> int:
+        return self._part(req).result_rows(req, resp)
+
+    def oracle(self):
+        return {self.image: self.image.oracle(), self.query: self.query.oracle()}
+
+    def check(self, con, req: dict, resp) -> str | None:
+        part = self._part(req)
+        return part.check(con[part], req, resp)
+
+
 # --- extension pipeline -----------------------------------------------------
+
+
+#: the package's process-global memo stores: module-level dicts and lists
+#: named like ``_NB_ARTIFACTS_MEMO`` or ``_SHINGLE_CACHE``
+_MEMO_NAME = re.compile(r"_[A-Z0-9_]*(MEMO|CACHE)")
+_PACKAGE = "web_maxiv_hdbppviewer_spark"
+
+
+def memo_stores() -> dict[str, object]:
+    """``module.NAME`` -> store, for every loaded module of the package."""
+    out = {}
+    for mod_name, mod in list(sys.modules.items()):
+        if mod is None or not (mod_name == _PACKAGE or mod_name.startswith(_PACKAGE + ".")):
+            continue
+        for name, value in vars(mod).items():
+            if _MEMO_NAME.fullmatch(name) and isinstance(value, (dict, list)):
+                out[f"{mod_name}.{name}"] = value
+    return out
+
+
+def clear_memos() -> None:
+    """Empty every process-global memo, so the next pass pays each memo
+    build as a batch job in a fresh process would. Some memos hold plain
+    driver data keyed by input path alone (``_NB_ARTIFACTS_MEMO``) and
+    would otherwise survive the session restart between passes."""
+    for store in memo_stores().values():
+        store.clear()
+
+
+def memo_entries() -> int:
+    """Entries in the process-global memos, except the per-session table
+    registry that ``load_tables`` fills when a pass opens its inputs."""
+    return sum(
+        len(store) for name, store in memo_stores().items()
+        if name != f"{_PACKAGE}.sources.tables._CACHE"
+    )
 
 
 def _canon(pdf) -> tuple[list, list]:
@@ -396,12 +497,12 @@ def _canon(pdf) -> tuple[list, list]:
 
 class PipelineBatch:
     """An ordered subset of the declared extension queries, each built and
-    forced through a noop sink in a fresh session. The warm pass collects
-    every result instead, and those results are what ``check`` compares."""
+    forced through a noop sink in a fresh session with empty memos, as a
+    batch job would run them. There is no warm pass: the first pass of a
+    run is the batch job. After the timed passes, each query is collected
+    once more in the last pass's session, and that result is checked."""
 
     name = "pipeline_batch"
-    #: a pass is the unit a batch user waits for, so latency is per pass;
-    #: every pass runs in a fresh session and pays its own memo builds
     batch = True
 
     def __init__(self, size: str):
@@ -411,17 +512,21 @@ class PipelineBatch:
         return [{"kind": "pipeline", "module": m, "query": q} for m, q in PIPELINE]
 
     def warm_requests(self) -> list[dict]:
-        return self.block(random.Random(0))
+        return []
 
-    def prepare(self, spark, work: str, seed: int) -> dict:
-        self.sf_dir = os.path.join(work, "sf")
+    def generate(self, inputs: str, seed: int) -> None:
+        self.sf_dir = os.path.join(inputs, "sf")
         write_testdata(self.sf_dir, seed, **self.cfg)
+
+    def prepare(self, spark, work: str) -> dict:
         self.reopen(spark)
         return {}
 
     def reopen(self, spark) -> None:
+        """Open the inputs in ``spark`` with every process-global memo empty."""
         from web_maxiv_hdbppviewer_spark.sources.tables import load_tables
 
+        clear_memos()
         self.spark = spark
         load_tables(spark, self.sf_dir)
 
@@ -455,7 +560,7 @@ class PipelineBatch:
         return None
 
 
-WORKLOADS = {w.name: w for w in (ImageDense, QueryWide, PipelineBatch)}
+WORKLOADS = {w.name: w for w in (ImageDense, QueryWide, Interactive, PipelineBatch)}
 
 
 def request_stream(workload: str, seed: int, blocks: int, size: str = "bench") -> list[dict]:
