@@ -193,6 +193,8 @@ class ImageDense:
 
         ids = {n: i + 1 for i, n in enumerate(self.names)}
         t0, t1 = _us(req["t0"]), _us(req["t1"])
+        d0 = _us(datetime.combine(req["t0"].date(), datetime.min.time()))
+        d1 = _us(datetime.combine(req["t1"].date(), datetime.min.time()) + timedelta(days=1))
         w, h = IMAGE_SIZE
         for axis, cfg in req["axes"].items():
             names = [a["name"] for a in req["attributes"] if str(a["y_axis"]) == axis]
@@ -209,15 +211,21 @@ class ImageDense:
             got = {n: resp["descs"][n] for n in names if n in resp["descs"]}
             if got != want:
                 return f"axis {axis} descs differ"
-            valid = con.execute(
-                f"SELECT count({v}) FROM dp WHERE att_conf_id IN ({id_list})"
-                f" AND t >= {t0} AND t <= {t1}"
-            ).fetchone()[0]
+            # the line raster draws from the whole UTC days the window
+            # covers, so a segment between points on either side of the
+            # view can cross it with no point inside: pixels must be lit
+            # when the view [t0, t1] has points, and may be lit only when
+            # the covered days have points
+            in_view, in_days = con.execute(
+                f"SELECT count({v}) FILTER (WHERE t >= {t0} AND t <= {t1}), count({v})"
+                f" FROM dp WHERE att_conf_id IN ({id_list}) AND t >= {d0} AND t < {d1}"
+            ).fetchone()
             img = decode_png_rgba(base64.b64decode(resp["images"][int(axis)]["image"]))
             if img.shape != (h, w, 4):
                 return f"axis {axis} png is {img.shape}"
-            if bool((img[:, :, 3] > 0).any()) != (valid > 0):
-                return f"axis {axis} lit pixels disagree with {valid} points"
+            lit = bool((img[:, :, 3] > 0).any())
+            if lit != bool(in_view) and lit != bool(in_days):
+                return f"axis {axis} lit={lit} with {in_view} points in view, {in_days} in its days"
         return None
 
 
