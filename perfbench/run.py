@@ -52,7 +52,9 @@ sys.path[:0] = [HERE, ROOT]
 import sparktrace  # noqa: E402
 import workloads  # noqa: E402
 
-#: set-ups per run; setup_s is their median
+#: set-ups per run; setup_s is their median. A batch workload's timed
+#: passes each start with a set-up, so it runs one rep before the warm
+#: pass and at least SETUP_REPS - 1 timed passes.
 SETUP_REPS = 3
 
 END_TO_END = {
@@ -197,40 +199,48 @@ class Runner:
 
     # -- phases --------------------------------------------------------
 
-    def setup(self) -> dict:
+    def setup(self) -> None:
         """The inputs are generated once, untimed (benchmark code). Each
         rep starts a fresh session and runs the program's set-up on them;
         the warm requests follow the last rep, once. ``setup_s`` is the
-        median rep plus the warm requests."""
+        median rep plus the warm requests (see ``setup_result``)."""
         t = time.perf_counter()
         self.wl.generate(os.path.join(self.work, "inputs"), self.args.seed)
-        generate_s = time.perf_counter() - t
-        reps, starts, info = [], [], {}
-        for rep in range(SETUP_REPS):
+        self.generate_s = time.perf_counter() - t
+        self.reps, self.starts, self.info = [], [], {}
+        for rep in range(1 if self.wl.batch else SETUP_REPS):
             rep_dir = os.path.join(self.work, f"setup{rep}")
             t = time.perf_counter()
             self.session()
-            starts.append(time.perf_counter() - t)
+            self.starts.append(time.perf_counter() - t)
             for k, v in self.wl.prepare(self.spark, rep_dir).items():
-                info.setdefault(k, []).append(v)
-            reps.append(time.perf_counter() - t)
+                self.info.setdefault(k, []).append(v)
+            self.reps.append(time.perf_counter() - t)
             if rep:
                 shutil.rmtree(os.path.join(self.work, f"setup{rep - 1}"), ignore_errors=True)
-        # one warm request per request type, once, on the final set-up
+        # one warm request per request type, once, on the final set-up; a
+        # batch workload's warm request is one pass down the timed path
         t = time.perf_counter()
         self.warm = []
         for req in self.wl.warm_requests():
             try:
-                self.warm.append((req, self.wl.execute(req), None))
+                resp = self._noop(req) if self.wl.batch else self.wl.execute(req)
+                self.warm.append((req, resp, None))
             except Exception as e:  # reported by check()
                 self.warm.append((req, None, repr(e)[:500]))
-        warm_s = time.perf_counter() - t
-        out = {k: statistics.median(v) for k, v in info.items()}
-        out["session.start_s"] = statistics.median(starts)
+        self.warm_s = time.perf_counter() - t
+
+    def setup_result(self) -> dict:
+        out = {k: statistics.median(v) for k, v in self.info.items()}
+        out["session.start_s"] = statistics.median(self.starts)
         return {
-            "setup_s": statistics.median(reps) + warm_s, "reps_s": reps,
-            "warm_s": warm_s, "generate_s": generate_s, "layer": out,
+            "setup_s": statistics.median(self.reps) + self.warm_s, "reps_s": self.reps,
+            "warm_s": self.warm_s, "generate_s": self.generate_s, "layer": out,
         }
+
+    def _noop(self, req: dict) -> None:
+        """Build a pipeline query and force it through a noop sink."""
+        self.wl.build(self.spark, req).write.format("noop").mode("overwrite").save()
 
     def _collect(self, group: str) -> dict:
         t = time.perf_counter()
@@ -276,19 +286,24 @@ class Runner:
         return rec, resp
 
     def measure(self) -> tuple[list, list]:
-        """Whole blocks until --seconds have passed, at least one."""
+        """Whole blocks until --seconds have passed, at least one (at
+        least SETUP_REPS - 1 passes of a batch workload)."""
         rng = random.Random(self.args.seed)
         blocks, done = [], []
         self.memo_at_pass = []
+        least = SETUP_REPS - 1 if self.wl.batch else 1
         start = time.perf_counter()
-        while not blocks or time.perf_counter() - start < self.args.seconds:
+        while len(blocks) < least or time.perf_counter() - start < self.args.seconds:
             b = len(blocks)
             block = self.wl.block(rng)
             if self.wl.batch:
-                # the first pass runs in the last set-up's fresh session
-                if b:
-                    self.session()
-                    self.wl.reopen(self.spark)
+                # every pass in a fresh session with empty memos: a
+                # set-up rep, timed as one but not part of the pass
+                t = time.perf_counter()
+                self.session()
+                self.starts.append(time.perf_counter() - t)
+                self.wl.reopen(self.spark)
+                self.reps.append(time.perf_counter() - t)
                 self.memo_at_pass.append(workloads.memo_entries())
             t = time.perf_counter()
             self.trace_s = 0.0
@@ -306,10 +321,6 @@ class Runner:
         collected once more in the last pass's session and that result
         is judged."""
         con = self.wl.oracle()
-        failures = [
-            f"warm {req['kind']}: {msg}" for req, resp, err in self.warm
-            if (msg := err or self.wl.check(con, req, resp))
-        ]
         verdict = {}
         if self.wl.batch:
             for req in self.wl.block(None):
@@ -317,6 +328,10 @@ class Runner:
                     verdict[req["query"]] = self.wl.check(con, req, self.wl.execute(req))
                 except Exception as e:  # counted against every pass
                     verdict[req["query"]] = repr(e)[:500]
+        failures = [
+            f"warm {req['kind']}: {msg}" for req, resp, err in self.warm
+            if (msg := err or (verdict[req["query"]] if self.wl.batch else self.wl.check(con, req, resp)))
+        ]
         for req, resp, rec in done:
             if rec["error"] is not None:
                 msg = rec["error"]
@@ -442,7 +457,7 @@ def main(argv=None) -> int:
     try:
         phases = {"start": time.perf_counter() - T_START}
         t = time.perf_counter()
-        setup = runner.setup()
+        runner.setup()
         phases["setup"] = time.perf_counter() - t
         spark = runner.spark
         stamp = {
@@ -457,6 +472,7 @@ def main(argv=None) -> int:
         t = time.perf_counter()
         blocks, done = runner.measure()
         phases["measure"] = time.perf_counter() - t
+        setup = runner.setup_result()
         t = time.perf_counter()
         failures = runner.check(done)
         phases["check"] = time.perf_counter() - t

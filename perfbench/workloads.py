@@ -120,11 +120,17 @@ class ImageDense:
         return out
 
     def warm_requests(self) -> list[dict]:
+        """A zoomed-in and a whole-store request, so that both the
+        raw-point path and the line raster are warm before timing."""
+        axes = {"0": {"scale": "linear"}, "1": {"scale": "log"}}
         t0 = EPOCH + timedelta(hours=2)
         return [{
-            "kind": "image", "t0": t0, "t1": t0 + timedelta(hours=1),
-            "axes": {"0": {"scale": "linear"}, "1": {"scale": "log"}},
+            "kind": "image", "t0": t0, "t1": t0 + timedelta(hours=1), "axes": axes,
             "attributes": [{"name": n, "y_axis": i} for i, n in enumerate(self.names[:2])],
+        }, {
+            "kind": "image", "t0": EPOCH, "t1": EPOCH + timedelta(days=self.cfg["days"]),
+            "axes": axes,
+            "attributes": [{"name": n, "y_axis": i % 2} for i, n in enumerate(self.names)],
         }]
 
     def generate(self, inputs: str, seed: int) -> None:
@@ -299,12 +305,16 @@ class QueryWide:
         return out
 
     def warm_requests(self) -> list[dict]:
+        """One /query per output (raw or resampled, CSV or JSON) and one
+        search."""
         t0 = EPOCH + timedelta(days=3)
         return [
-            {"kind": "query", "names": [fixture_name(1), fixture_name(2)],
-             "t0": t0, "t1": t0 + timedelta(days=2), "interval": "1h", "fmt": "json"},
-            {"kind": "search", "pattern": "dom1/fam1/*", "max_n": 20},
-        ]
+            {"kind": "query", "names": [fixture_name(2 * i + 1), fixture_name(2 * i + 2)],
+             "t0": t0, "t1": t0 + timedelta(days=2), "interval": interval, "fmt": fmt}
+            for i, (interval, fmt) in enumerate(
+                [("1h", "json"), (None, "csv"), (None, "json"), ("12h", "csv")]
+            )
+        ] + [{"kind": "search", "pattern": "dom1/fam1/*", "max_n": 20}]
 
     def generate(self, inputs: str, seed: int) -> None:
         self.sf_dir = os.path.join(inputs, "sf")
@@ -506,9 +516,11 @@ def _canon(pdf) -> tuple[list, list]:
 class PipelineBatch:
     """An ordered subset of the declared extension queries, each built and
     forced through a noop sink in a fresh session with empty memos, as a
-    batch job would run them. There is no warm pass: the first pass of a
-    run is the batch job. After the timed passes, each query is collected
-    once more in the last pass's session, and that result is checked."""
+    batch job would run them. The warm request is one whole pass down the
+    same path; it warms the JVM's and the Python workers' code, not the
+    memos, which every timed pass empties and builds again. After the
+    timed passes, each query is collected once more in the last pass's
+    session, and that result is checked."""
 
     name = "pipeline_batch"
     batch = True
@@ -520,7 +532,7 @@ class PipelineBatch:
         return [{"kind": "pipeline", "module": m, "query": q} for m, q in PIPELINE]
 
     def warm_requests(self) -> list[dict]:
-        return []
+        return self.block(None)
 
     def generate(self, inputs: str, seed: int) -> None:
         self.sf_dir = os.path.join(inputs, "sf")
